@@ -61,13 +61,13 @@ def _chaos_wrap(op: E.Op) -> E.Op:
     the reference kills 2 workers mid-job and recovers by WAL replay.
     Here the op's task kills ITSELF on its first attempt in partitions 0
     and 1; Spark's task retry (session.py runs local[n,2]) replays them
-    and the job must still produce exactly-once output. Only PluginOp /
-    ExecOp wrap (they run in tasks); NativeOp has no task-side hook."""
-    if not isinstance(op, (E.PluginOp, E.ExecOp)):
+    and the job must still produce exactly-once output. Only PluginOp
+    wraps (it runs in tasks; ExecOp builds one); NativeOp has no
+    task-side hook."""
+    if not isinstance(op, E.PluginOp):
         return op
 
-    inner_fn = op.fn if isinstance(op, E.PluginOp) else None
-    inner_exe = op.exe if isinstance(op, E.ExecOp) else None
+    inner_fn = op.fn
 
     def chaotic(key: str, value: str, pattern: str | None):
         from pyspark import TaskContext
@@ -75,9 +75,7 @@ def _chaos_wrap(op: E.Op) -> E.Op:
         tc = TaskContext.get()
         if tc is not None and tc.partitionId() < 2 and tc.attemptNumber() == 0:
             raise RuntimeError("chaos: injected worker failure (RainStormWithFail)")
-        if inner_fn is not None:
-            return inner_fn(key, value, pattern)
-        return E.exec_op_record(inner_exe, key, value, pattern)
+        return inner_fn(key, value, pattern)
 
     return E.PluginOp(chaotic, contract=op.contract)
 

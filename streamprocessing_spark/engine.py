@@ -35,6 +35,7 @@ and (in streaming) checkpointed state store provide those guarantees.
 from __future__ import annotations
 
 import csv
+import functools
 import io
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -312,8 +313,7 @@ def exec_op_record(exe: str, key: str, value: str, pattern: str | None):
     return [(lines[i], lines[i + 1]) for i in range(0, len(lines) - 1, 2)]
 
 
-@dataclass(frozen=True)
-class ExecOp:
+def ExecOp(exe: str, contract: str = "mixed") -> PluginOp:
     """The reference's LITERAL operator contract: an external executable
     invoked as ``<exe> <key> <value> [pattern]`` once per record
     (rainstorm/server.go:320-331), its stdout classified by line count
@@ -332,41 +332,10 @@ class ExecOp:
     Forks happen executor-side inside mapInPandas partitions, so the
     cost parallelizes across cores/executors and nothing flows through
     the driver."""
-
-    exe: str
-    contract: str = "mixed"
-
-    def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
-
-        ensure_shippable()
-        exe = self.exe
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                kinds: list[str] = []
-                keys: list[str] = []
-                vals: list[str] = []
-                for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
-                    r = exec_op_record(exe, k, v, pattern)
-                    if r is None:
-                        continue
-                    if isinstance(r, str):
-                        kinds.append("count")
-                        keys.append(r)
-                        vals.append("")
-                    else:
-                        for nk, nv in r:
-                            kinds.append("emit")
-                            keys.append(nk)
-                            vals.append(nv)
-                yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
-
-        tagged = records.mapInPandas(kernel, _TAGGED_SCHEMA)
-        return _collapse_tagged(tagged, self.contract)
+    return PluginOp(functools.partial(exec_op_record, exe), contract)
 
 
-Op = NativeOp | PluginOp | BatchPluginOp | ExecOp
+Op = NativeOp | PluginOp | BatchPluginOp
 
 
 @dataclass(frozen=True)

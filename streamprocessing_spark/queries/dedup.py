@@ -158,11 +158,11 @@ def dedup_minhash_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERSISTED band table): count-scaled banding re-derives (r, b) only
     when ⌈log₂ n⌉ steps — once per corpus DOUBLING — so the policy at
     scale is: probe the persisted table at its recorded (r, b) between
-    steps (signatures are prefix-truncatable, so a longer-r signature
-    probes a shorter-r table by truncation), and rebuild the band table
-    at each doubling — an amortized O(1) rebuilds per lifetime of any
-    given corpus size, the same cadence LSM trees pay for level
-    compaction.
+    steps, and rebuild the band table at each doubling. Each band key is
+    one xxhash64 over the band's r minhash values, which cannot be
+    truncated to a shorter r, so any step in r means a full rebuild —
+    still an amortized O(1) rebuilds per lifetime of any given corpus
+    size, the same cadence LSM trees pay for level compaction.
 
     Serves the shared cascade view (_pairs_view) since round 7 — first
     consumer in a session builds the scaled pipeline, the other six

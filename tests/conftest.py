@@ -12,6 +12,17 @@ from streamprocessing_spark.session import get_spark
 SMOKE_SF = "/root/testdata/sf0.001"
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say when the slow tier was left out (pytest.ini deselects it by
+    default), so a plain `pytest tests/` run does not read as the full
+    gate."""
+    deselected = terminalreporter.stats.get("deselected", [])
+    n_slow = sum(1 for item in deselected if item.get_closest_marker("slow"))
+    if n_slow:
+        terminalreporter.write_sep("-", f"{n_slow} slow test(s) deselected")
+        terminalreporter.write_line('full tier: python -m pytest tests/ -m "" -q')
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests")

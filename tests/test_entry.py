@@ -25,6 +25,23 @@ def test_queries_and_oracles_consistent():
     assert set(os_) <= set(qs)
 
 
+def test_driver_sample_order_is_reverify_then_registration():
+    """The driver samples the head of queries(): the _REVERIFY names lead
+    in tuple order, every other name follows in registration order, and
+    the reordering neither drops nor alters a query or an oracle."""
+    from streamprocessing_spark.registry import _REGISTRY, _REVERIFY, all_specs
+
+    order = list(all_specs())
+    assert order[: len(_REVERIFY)] == list(_REVERIFY)
+    assert order[len(_REVERIFY) :] == [n for n in _REGISTRY if n not in _REVERIFY]
+
+    mod = _entry_mod()
+    qs, os_ = mod.queries(), mod.oracle_sql()
+    assert list(qs) == order and len(qs) == 394
+    assert os_ == {n: s.oracle for n, s in _REGISTRY.items() if s.oracle is not None}
+    assert list(os_) == [n for n in order if n in os_]
+
+
 @pytest.mark.slow
 def test_all_queries_run_at_smoke_scale(spark, sf_dir):
     mod = _entry_mod()

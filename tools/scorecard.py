@@ -18,7 +18,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from streamprocessing_spark.registry import all_specs  # noqa: E402
+from streamprocessing_spark.registry import _REVERIFY, all_specs  # noqa: E402
 
 # Scale-row labels the prose in SCALE.md establishes; keyed by
 # SCALEBENCH100 row name. Everything unlabeled is a production claim.
@@ -76,9 +76,9 @@ def main() -> int:
         f"- **{len(gated)}/{len(specs)} driver-gated green** across"
         f" {len(list(ROOT.glob('CORRECTNESS_r*.json')))} rounds"
         " (zero oracle mismatches ever recorded).",
-        f"- Remaining {len(specs) - len(gated)} names: locally rehearsed"
-        " green in exact presentation order (one shared session) and"
-        " front-loaded for the next driver gate.",
+        f"- The {len(_REVERIFY)} `_REVERIFY` names (code changed since their"
+        " last driver row) lead the driver sample; the rest follow in"
+        " registration order.",
         "",
         "| family | registered | driver-gated |",
         "|---|---|---|",
@@ -121,7 +121,7 @@ def main() -> int:
         "## Headline bench (BENCH_LOCAL.json)",
         "",
         f"- **{len(bench['queries'])} headline queries in"
-        f" {bench['value']:.1f} s** at sf{bench['sf']} on local[32].",
+        f" {bench['value']:.1f} s** at sf{bench['sf']}.",
         "- Throughput vs the reference report's Spark rows (records/s):",
     ]
     t = bench["throughput"]
