@@ -26,6 +26,15 @@ flavors:
   reference; count-keyed records are aggregated and re-emitted as
   (key, running-total-as-string) records.
 
+When op1 is a PluginOp with ``contract="emit"``, op2 is a PluginOp and the
+job asks for no ``num_tasks`` repartition, the two ops run chained in ONE
+mapInPandas kernel: op1's emits feed op2 before the batch leaves Python,
+so each record crosses the JVM↔Python boundary once instead of twice and
+each task holds one Python worker instead of two. Every other job runs
+each op as its own pass: a ``mixed`` op1's count records must be
+aggregated before op2 sees them, and ``num_tasks`` asks for a shuffle
+between the stages.
+
 Everything the reference's engine did besides the ops — task placement,
 per-record RPC + ack + retry, WAL, dedup, failure recovery
 (server.go:186-408) — is deliberately absent: Spark's scheduler, shuffle
@@ -88,42 +97,84 @@ class PluginOp:
       aggregate with a stateless branch trips Spark's global-watermark
       correctness checker (and genuinely mixes append/update semantics).
     The reference never needed the distinction because its sink printed
-    whatever arrived; Spark's sink modes make the contract explicit.
+    whatever arrived; Spark's sink modes make the contract explicit. A
+    record whose result breaks an "emit"/"count" contract fails the task
+    with a ValueError rather than being dropped.
+
+    Chaining: in a RainStormJob, an "emit" op1 followed by a PluginOp op2
+    (and no ``num_tasks``) runs as one kernel, op1's emits feeding op2
+    one Arrow batch at a time. A "mixed" op1 does not chain — its
+    count records are aggregated across the whole input before op2 may
+    see them — and neither does a job with ``num_tasks``, which asks for
+    a repartition between the stages.
     """
 
     fn: PluginFn
     contract: str = "mixed"
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
+        return _apply_plugins(records, (self,), pattern)
 
-        ensure_shippable()
-        fn = self.fn
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                kinds: list[str] = []
-                keys: list[str] = []
-                vals: list[str] = []
-                # tolist(): plain-list iteration is ~2× faster than
-                # iterating pandas Series in this per-record hot loop
-                for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
-                    r = fn(k, v, pattern)
-                    if r is None:
-                        continue
-                    if isinstance(r, str):
-                        kinds.append("count")
-                        keys.append(r)
-                        vals.append("")
-                    else:
-                        for nk, nv in r:
-                            kinds.append("emit")
-                            keys.append(nk)
-                            vals.append(nv)
-                yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
+def _off_contract(fn: PluginFn, contract: str, returned: str) -> ValueError:
+    name = getattr(fn, "__qualname__", None) or repr(fn)
+    return ValueError(f"plugin op {name} declares contract={contract!r} but returned {returned}")
 
-        tagged = records.mapInPandas(kernel, _TAGGED_SCHEMA)
-        return _collapse_tagged(tagged, self.contract)
+
+def _run_plugin(
+    fn: PluginFn, contract: str, pattern: str | None, keys: list[str], vals: list[str]
+) -> tuple[list[str], list[str], list[str]]:
+    """One PluginOp's per-record loop: parallel key/value lists in,
+    tagged (kinds, keys, values) lists out. A result outside the declared
+    contract raises instead of being dropped by _collapse_tagged's filter;
+    the check is one flag test inside each result-kind branch, so the
+    loop does no extra work before it knows the kind."""
+    kinds: list[str] = []
+    out_keys: list[str] = []
+    out_vals: list[str] = []
+    emit_only = contract == "emit"
+    count_only = contract == "count"
+    for k, v in zip(keys, vals):
+        r = fn(k, v, pattern)
+        if r is None:
+            continue
+        if isinstance(r, str):
+            if emit_only:
+                raise _off_contract(fn, contract, f"a count key {r!r}")
+            kinds.append("count")
+            out_keys.append(r)
+            out_vals.append("")
+        else:
+            if count_only and r:  # an empty list loses nothing
+                raise _off_contract(fn, contract, f"emit pairs {list(r)[:3]!r}")
+            for nk, nv in r:
+                kinds.append("emit")
+                out_keys.append(nk)
+                out_vals.append(nv)
+    return kinds, out_keys, out_vals
+
+
+def _apply_plugins(records: DataFrame, ops: tuple[PluginOp, ...], pattern: str | None) -> DataFrame:
+    """Run ``ops`` back to back inside ONE mapInPandas kernel: per Arrow
+    batch, each op's emits are the next op's input. Every op but the last
+    must be emit-contract (RainStormJob.run checks this), so the tagged
+    output is the last op's and collapses under its contract."""
+    from streamprocessing_spark.shipping import ensure_shippable
+
+    ensure_shippable()
+    # plain (fn, contract) pairs: the task closure need not carry PluginOp
+    stages = tuple((op.fn, op.contract) for op in ops)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # tolist(): plain-list iteration is ~2x faster than iterating
+            # pandas Series in the per-record hot loop
+            keys, vals = pdf["key"].tolist(), pdf["value"].tolist()
+            for fn, contract in stages:
+                kinds, keys, vals = _run_plugin(fn, contract, pattern, keys, vals)
+            yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
+
+    return _collapse_tagged(records.mapInPandas(kernel, _TAGGED_SCHEMA), ops[-1].contract)
 
 
 class _PluginCacheRegistry:
@@ -357,11 +408,21 @@ class RainStormJob:
     num_tasks: int | None = None
 
     def run(self, records: DataFrame) -> DataFrame:
-        """records (key, value) → op1 → [repartition] → op2."""
-        out = self.op1.apply(records, self.pattern)
+        """records (key, value) → op1 → [repartition] → op2; an emit
+        PluginOp feeding a PluginOp with no repartition runs as one
+        chained kernel (see PluginOp)."""
+        op1, op2 = self.op1, self.op2
+        if (
+            isinstance(op1, PluginOp)
+            and op1.contract == "emit"
+            and isinstance(op2, PluginOp)
+            and self.num_tasks is None
+        ):
+            return _apply_plugins(records, (op1, op2), self.pattern)
+        out = op1.apply(records, self.pattern)
         if self.num_tasks is not None:
             out = out.repartition(self.num_tasks, F.col("key"))
-        return self.op2.apply(out, self.pattern)
+        return op2.apply(out, self.pattern)
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,11 @@ _REVERIFY = (
     "dedup_paragraph_keep",
     "dedup_aware_split",
     "curation_manifest_end2end",
+    "rainstorm_streaming_app2",
+    "rainstorm_streaming_app1",
+    "rainstorm_plugin_app1",
+    "rainstorm_plugin_app2",
+    "rainstorm_exec_app2",
 )
 
 

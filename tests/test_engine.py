@@ -3,6 +3,8 @@ stdout-line classification), CSV quoting fidelity, native/plugin parity."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -81,6 +83,74 @@ def test_mixed_contract_single_op(spark, records):
     job = E.RainStormJob(op1=E.PluginOp(chaotic), op2=E.PluginOp(lambda k, v, p: [(k, v)]))
     out = sorted((r.key, r.value) for r in job.run(records).collect())
     assert out == [("a", "1"), ("b", "2"), ("bucket", "1")]
+
+
+def _map_in_pandas_nodes(df) -> int:
+    """Distinct MapInPandas nodes in the executed plan (AQE prints a node
+    in both its final and initial plan, and a cached one under every scan
+    of the cache)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(set(re.findall(r"MapInPandas \w+\([^)]*\)#(\d+)", plan)))
+
+
+def _rows(df):
+    return sorted((r.key, r.value) for r in df.collect())
+
+
+def test_emit_op1_chains_into_plugin_op2(spark, records):
+    """An emit-contract op1 and a PluginOp op2 run as ONE mapInPandas
+    kernel whose rows equal the two-pass op2(op1(records))."""
+    records = records.coalesce(1)  # one task per stage keeps these tests fast
+
+    def mixed_op2(key, value, pattern):
+        # count path for one key, flatMap for the rest
+        return key if key == "Warning" else [(key, value), (key + "!", value)]
+
+    for op1, op2, pattern in [
+        (E.PluginOp(E.app2_op1, "emit"), E.PluginOp(E.app2_op2, "count"), "Punched Telespar"),
+        (E.PluginOp(E.app1_op1, "emit"), E.PluginOp(E.app1_op2, "emit"), "a"),
+        (E.PluginOp(lambda k, v, p: [(v.split(",")[8], v)], "emit"), E.PluginOp(mixed_op2), None),
+    ]:
+        chained = E.RainStormJob(op1=op1, op2=op2, pattern=pattern).run(records)
+        want = _rows(op2.apply(op1.apply(records, pattern), pattern))
+        assert _rows(chained) == want and want
+        assert _map_in_pandas_nodes(chained) == 1
+    E.release_plugin_caches(blocking=True)
+
+
+def test_mixed_op1_or_num_tasks_keeps_two_passes(spark, records):
+    """A mixed op1 (its counts aggregate before op2) and an explicit
+    num_tasks (a repartition between stages) do not chain."""
+    records = records.coalesce(1)
+    op2 = E.PluginOp(E.app2_op2, "count")
+    for job in [
+        E.RainStormJob(op1=E.PluginOp(E.app2_op1), op2=op2, pattern="Punched Telespar"),
+        E.RainStormJob(op1=E.PluginOp(E.app2_op1, "emit"), op2=op2, pattern="Punched Telespar", num_tasks=3),
+    ]:
+        out = job.run(records)
+        assert _rows(out) == [("Warning", "2")]
+        assert _map_in_pandas_nodes(out) == 2
+    E.release_plugin_caches(blocking=True)
+
+
+def test_emit_contract_count_result_fails_loudly(spark, records):
+    """An emit-contract op returning a count key fails the task instead
+    of losing the record — in the chained kernel here."""
+    with pytest.raises(ValueError, match="contract='emit' but returned a count key"):
+        E._run_plugin(E.app2_op2, "emit", None, ["k"], ["v"])
+    job = E.RainStormJob(op1=E.PluginOp(E.app2_op2, "emit"), op2=E.PluginOp(E.app2_op2, "count"))
+    with pytest.raises(Exception, match="contract='emit' but returned a count key"):
+        job.run(records.coalesce(1)).collect()
+
+
+def test_count_contract_emit_result_fails_loudly(spark, records):
+    """A count-contract op returning emit pairs fails the task instead
+    of losing the record — in the single-op kernel here."""
+    with pytest.raises(ValueError, match="contract='count' but returned emit pairs"):
+        E._run_plugin(E.app1_op1, "count", "v", ["k"], ["v"])
+    op = E.PluginOp(E.app1_op1, "count")
+    with pytest.raises(Exception, match="contract='count' but returned emit pairs"):
+        op.apply(records.coalesce(1), "a").collect()
 
 
 def test_native_equals_plugin(spark, records):
