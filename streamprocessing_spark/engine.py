@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from streamprocessing_spark.shipping import drop_zip_finders, ensure_shippable
+
 PluginFn = Callable[[str, str, str | None], None | str | list[tuple[str, str]]]
 # Vectorized plugin: whole pandas batch in, tagged batch out
 # (columns kind/key/value, kind ∈ {"emit", "count"}).
@@ -159,13 +161,12 @@ def _apply_plugins(records: DataFrame, ops: tuple[PluginOp, ...], pattern: str |
     batch, each op's emits are the next op's input. Every op but the last
     must be emit-contract (RainStormJob.run checks this), so the tagged
     output is the last op's and collapses under its contract."""
-    from streamprocessing_spark.shipping import ensure_shippable
-
     ensure_shippable()
     # plain (fn, contract) pairs: the task closure need not carry PluginOp
     stages = tuple((op.fn, op.contract) for op in ops)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             # tolist(): plain-list iteration is ~2x faster than iterating
             # pandas Series in the per-record hot loop
@@ -326,12 +327,11 @@ class BatchPluginOp:
     contract: str = "mixed"  # same semantics as PluginOp.contract
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
-
         ensure_shippable()
         fn = self.fn
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            drop_zip_finders()
             for pdf in batches:
                 out = fn(pdf, pattern)
                 yield out[["kind", "key", "value"]]

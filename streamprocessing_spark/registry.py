@@ -76,6 +76,9 @@ _REVERIFY = (
     "rainstorm_plugin_app1",
     "rainstorm_plugin_app2",
     "rainstorm_exec_app2",
+    "sink_python_datasource_roundtrip",
+    "rainstorm_vectorized_app1",
+    "rainstorm_vectorized_app2",
 )
 
 

@@ -11,11 +11,18 @@ the task, no executor-side install or PYTHONPATH needed. This is also the
 right posture for a real cluster: the engine works without shipping wheels
 to every node. Idempotent and cheap; called before any Python-side
 operator is constructed.
+
+``drop_zip_finders`` is the executor-side half: Python task entry points
+call it first, so a reused worker does not pay to re-read Spark's zip
+archives on every task (see its docstring). Callers reference it as a
+module-level global, never via an import inside the task body, so it
+ships by value with them.
 """
 
 from __future__ import annotations
 
 import sys
+import zipimport
 
 
 def ensure_shippable() -> None:
@@ -29,3 +36,22 @@ def ensure_shippable() -> None:
                 cloudpickle.register_pickle_by_value(mod)
             except Exception:  # noqa: BLE001 - best-effort; ref-pickling still works in-repo
                 pass
+
+
+def drop_zip_finders() -> None:
+    """Delete the ``zipimporter`` finders from ``sys.path_importer_cache``.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    Python task, and since Python 3.10 that makes each cached zipimporter
+    re-read its whole archive directory. A reused worker holds about a
+    dozen of them (pyspark.zip and its subpackages, the py4j zip, the
+    Spark jar), which costs 150-230 ms per task on a 4-core box. Deleting
+    them is safe because the cache is only a cache: the next import
+    through such a path builds a fresh finder from zipimport's in-memory
+    directory cache, Spark's archives do not change while a worker lives,
+    and pyFiles added later get new sys.path entries with fresh finders.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)

@@ -12,9 +12,9 @@ This module re-expresses the sink as a Spark 4 Python Data Source
 writer (``format("keyed_lines")``): a minimal but REAL implementation
 of that protocol —
 
-- ``write(iterator)`` streams rows to ``<dir>/.tmp-<uuid>`` and returns
-  the temp name + row count as its commit message (never touching the
-  published namespace);
+- ``write(iterator)`` streams rows to ``<dir>/.tmp-<job-token>-<uuid>``
+  and returns the temp name + row count as its commit message (never
+  touching the published namespace);
 - ``commit(messages)`` renames exactly the temp files named in commit
   messages to ``part-<job-token>-<i>.txt`` (rename is the atomic
   publish; the per-job token keeps successive append jobs into the same
@@ -23,7 +23,11 @@ of that protocol —
   attempt whose message Spark delivers gets published — the same
   "commit messages are the source of truth" contract FileCommitProtocol
   uses);
-- ``abort(messages)`` deletes any temp litter.
+- ``abort(messages)`` deletes this job's temp litter.
+
+Both ``commit()`` and ``abort()`` sweep only temp files carrying their own
+job token: another job appending to the same directory at the same time
+keeps its in-flight temps.
 
 The reference's console mirror is deliberately NOT reproduced (a
 driver-side print is an anti-pattern at scale); the 500 ms flush cadence
@@ -44,6 +48,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from streamprocessing_spark.shipping import drop_zip_finders, ensure_shippable
+
 
 class _Committed(WriterCommitMessage):
     def __init__(self, tmp_name: str, n_rows: int) -> None:
@@ -61,7 +67,17 @@ class KeyedLinesWriter(DataSourceArrowWriter):
         # publishes accumulate across jobs, they don't overwrite).
         self.job_token = uuid.uuid4().hex[:12]
 
+    def _tmp_name(self) -> str:
+        return f".tmp-{self.job_token}-{uuid.uuid4().hex}"
+
+    def _sweep_temps(self) -> None:
+        prefix = f".tmp-{self.job_token}-"
+        for name in os.listdir(self.path):
+            if name.startswith(prefix):
+                os.remove(os.path.join(self.path, name))
+
     def write(self, iterator: Iterator) -> _Committed:
+        drop_zip_finders()
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -74,11 +90,11 @@ class KeyedLinesWriter(DataSourceArrowWriter):
             # fault-injection hook (tests only): the first attempt of
             # partition 0 dies AFTER writing temp litter — the retry
             # must be the only attempt that publishes
-            tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex}")
+            tmp = os.path.join(self.path, self._tmp_name())
             with open(tmp, "w", encoding="utf-8") as fh:
                 fh.write("LITTER\tnever-published\n")
             raise RuntimeError("injected first-attempt failure")
-        tmp_name = f".tmp-{uuid.uuid4().hex}"
+        tmp_name = self._tmp_name()
         n = 0
         # Arrow writer (round 10, guide §4): rows previously crossed the
         # JVM→Python boundary one pickled Row at a time and were
@@ -114,16 +130,12 @@ class KeyedLinesWriter(DataSourceArrowWriter):
                 raise FileExistsError(dst)
             os.replace(src, dst)  # atomic publish
             published += 1
-        # sweep litter from failed attempts — their temp names are in no
-        # commit message, so they can never have been published
-        for name in os.listdir(self.path):
-            if name.startswith(".tmp-"):
-                os.remove(os.path.join(self.path, name))
+        # sweep litter from this job's failed attempts — their temp names
+        # are in no commit message, so they can never have been published
+        self._sweep_temps()
 
     def abort(self, messages) -> None:
-        for name in os.listdir(self.path):
-            if name.startswith(".tmp-"):
-                os.remove(os.path.join(self.path, name))
+        self._sweep_temps()
 
 
 class KeyedLinesSink(DataSource):
@@ -143,4 +155,7 @@ class KeyedLinesSink(DataSource):
 
 
 def register_sink(spark) -> None:
+    # the writer (and the helpers it calls) must ship by value even when
+    # no Python operator of this package ran in the session
+    ensure_shippable()
     spark.dataSource.register(KeyedLinesSink)

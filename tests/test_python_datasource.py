@@ -206,3 +206,97 @@ def test_keyed_lines_sink_sequential_appends_never_clobber(spark, tmp_path):
         with open(os.path.join(out, n), encoding="utf-8") as fh:
             rows += [line.rstrip("\n").split("\t")[0] for line in fh]
     assert sorted(rows, key=int) == [str(i) for i in range(120)]
+
+
+def _batch(lo, hi):
+    import pyarrow as pa
+
+    keys = pa.array([str(i) for i in range(lo, hi)])
+    return pa.RecordBatch.from_arrays([keys, keys], names=["k", "v"])
+
+
+def _published_keys(out):
+    rows = []
+    for n in sorted(os.listdir(out)):
+        assert n.startswith("part-"), f"unexpected file {n}"
+        with open(os.path.join(out, n), encoding="utf-8") as fh:
+            rows += [line.rstrip("\n").split("\t")[0] for line in fh]
+    return sorted(rows, key=int)
+
+
+def test_keyed_lines_concurrent_jobs_keep_each_others_temps(tmp_path):
+    """Two jobs append to one directory at once: job A commits (or aborts)
+    while job B's task has written its temp file but B has not committed.
+    A sweeps only its own temps, so B's publish still finds its file.
+    Pure Python: the writer's methods are called as Spark would call them."""
+    from streamprocessing_spark.sources.linesink import KeyedLinesWriter
+
+    out = str(tmp_path / "shared")
+    os.makedirs(out)
+    a = KeyedLinesWriter(out, fail_first_attempt=False)
+    b = KeyedLinesWriter(out, fail_first_attempt=False)
+    msg_a = a.write(iter([_batch(0, 10)]))
+    msg_b = b.write(iter([_batch(10, 25)]))
+    a.commit([msg_a])
+    b.commit([msg_b])
+    assert _published_keys(out) == [str(i) for i in range(25)]
+
+    c = KeyedLinesWriter(out, fail_first_attempt=False)
+    d = KeyedLinesWriter(out, fail_first_attempt=False)
+    msg_c = c.write(iter([_batch(100, 105)]))
+    msg_d = d.write(iter([_batch(200, 203)]))
+    c.abort([msg_c])
+    d.commit([msg_d])
+    assert _published_keys(out) == [str(i) for i in range(25)] + ["200", "201", "202"]
+
+
+def test_register_sink_ships_writer_by_value(tmp_path):
+    """register_sink() makes the sink module pickle by value even in a
+    job that ran no Python operator: the pickled writer class loads and
+    writes in a process that cannot import this package."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from streamprocessing_spark.sources import linesink
+
+    try:
+        cloudpickle.unregister_pickle_by_value(linesink)
+    except ValueError:  # not registered yet in this process
+        pass
+
+    class _Registry:
+        def register(self, cls):
+            self.cls = cls
+
+    class _Session:
+        dataSource = _Registry()
+
+    session = _Session()
+    linesink.register_sink(session)
+    assert session.dataSource.cls is linesink.KeyedLinesSink
+    payload = cloudpickle.dumps(linesink.KeyedLinesWriter)
+    out = tmp_path / "shipped"
+    out.mkdir()
+    script = (
+        "import pickle, sys\n"
+        "import pyarrow as pa\n"
+        "cls = pickle.loads(sys.stdin.buffer.read())\n"
+        "w = cls(sys.argv[1], False)\n"
+        "col = pa.array(['a', 'b'])\n"
+        "w.commit([w.write(iter([pa.RecordBatch.from_arrays([col, col], names=['k', 'v'])]))])\n"
+        "assert not any(m.startswith('streamprocessing_spark') for m in sys.modules)\n"
+    )
+    # -I: no PYTHONPATH, no script dir; cwd outside the checkout
+    proc = subprocess.run(
+        [sys.executable, "-I", "-c", script, str(out)],
+        input=payload,
+        capture_output=True,
+        cwd=str(tmp_path),
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    [part] = os.listdir(out)
+    with open(out / part, encoding="utf-8") as fh:
+        assert fh.read() == "a\ta\nb\tb\n"
