@@ -45,7 +45,8 @@ def drop_zip_finders() -> None:
     Python task, and since Python 3.10 that makes each cached zipimporter
     re-read its whole archive directory. A reused worker holds about a
     dozen of them (pyspark.zip and its subpackages, the py4j zip, the
-    Spark jar), which costs 150-230 ms per task on a 4-core box. Deleting
+    Spark jar), which costs 150-450 ms per task on a 4-core box
+    (tools/python_task_overhead.py measures it). Deleting
     them is safe because the cache is only a cache: the next import
     through such a path builds a fresh finder from zipimport's in-memory
     directory cache, Spark's archives do not change while a worker lives,

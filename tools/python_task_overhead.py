@@ -88,7 +88,9 @@ def run(spark, reps: int, rows: int) -> dict:
         stage_ids = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
         if rep == 0:  # worker start-up and first imports
             continue
-        assert sum(1 for r in got if r.key != MARK) == PARTITIONS * rows
+        passed = sum(1 for r in got if r.key != MARK)
+        if passed != PARTITIONS * rows:
+            raise RuntimeError(f"identity job returned {passed} records, expected {PARTITIONS * rows}")
         for r in got:
             if r.key == MARK:
                 ms, n = r.value.split(",")
