@@ -27,7 +27,10 @@ of that protocol —
 
 Both ``commit()`` and ``abort()`` sweep only temp files carrying their own
 job token: another job appending to the same directory at the same time
-keeps its in-flight temps.
+keeps its in-flight temps. The cost of that: temp files of a job whose
+driver died before it reached ``commit()`` or ``abort()`` are never
+removed. They are harmless to readers, which take only ``part-`` files
+(and Spark hides dot-files), but they stay in the directory.
 
 The reference's console mirror is deliberately NOT reproduced (a
 driver-side print is an anti-pattern at scale); the 500 ms flush cadence

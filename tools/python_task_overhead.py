@@ -2,24 +2,30 @@
 
 Usage, from the root of the checkout:
 
-    python tools/python_task_overhead.py [--reps 10] [--rows 300]
+    python tools/python_task_overhead.py
 
 On ``get_spark``'s session it runs an identity job through an
-emit-contract PluginOp over 8 partitions of ``--rows`` records, once to
-start the Python workers and then ``--reps`` timed times. The op passes
-every record through; on the first record of each task it also times one
-``importlib.invalidate_caches()`` call inside the worker (the call PySpark
-makes at the start of every Python task) and counts the ``zipimporter``
-finders in the worker's ``sys.path_importer_cache``.
+emit-contract PluginOp over 8 partitions of 300 records, once to start the
+Python workers and then 10 timed reps. The op passes every record through,
+and the median Spark task ``executorRunTime`` of the timed jobs is the
+first figure.
 
-It prints the median Spark task ``executorRunTime`` over the timed reps,
-the median and quartiles of the in-worker ``invalidate_caches()`` time and
-the median zip finder count, then the same as one JSON line.
+After each timed job the same job runs once more with the op in probe
+mode: on the last record of each task it counts the ``zipimporter``
+finders left in the worker's ``sys.path_importer_cache`` and times one
+``importlib.invalidate_caches()`` call. That is the state, and the cost,
+that PySpark's own ``invalidate_caches()`` call at the start of the next
+task on that worker meets (``setup_spark_files`` runs before any op code,
+so it cannot be timed directly). The probe job is kept apart from the
+timed job so that its extra call does not count in ``executorRunTime``.
+
+It prints the median task ``executorRunTime``, the median and quartiles of
+the in-worker ``invalidate_caches()`` time and the median finder count,
+then the same as one JSON line.
 """
 
 from __future__ import annotations
 
-import argparse
 import importlib
 import json
 import os
@@ -32,21 +38,29 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 PARTITIONS = 8
+ROWS = 300  # records per partition
+REPS = 10
 MARK = "__task_probe__"
-# the task whose first record was probed; the op ships by value, so this
-# dict lives in the worker
+PROBE = "probe"
+# the current task and how many of its records the op has seen; the op
+# ships by value, so this dict lives in the worker
 _SEEN: dict[str, int] = {}
 
 
 def probe_op(key: str, value: str, pattern: str | None):
-    """Identity emit op; the first record of each task also emits one
-    (MARK, "<invalidate_caches ms>,<zip finders>") record."""
+    """Identity emit op. With ``pattern == PROBE`` the last record of each
+    task also emits one (MARK, "<invalidate_caches ms>,<zip finders>")
+    record."""
+    if pattern != PROBE:
+        return [(key, value)]
     from pyspark import TaskContext
 
     tid = TaskContext.get().taskAttemptId()
-    if _SEEN.get("task") == tid:
+    if _SEEN.get("task") != tid:
+        _SEEN["task"], _SEEN["seen"] = tid, 0
+    _SEEN["seen"] += 1
+    if _SEEN["seen"] < ROWS:
         return [(key, value)]
-    _SEEN["task"] = tid
     zips = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
     t0 = time.perf_counter()
     importlib.invalidate_caches()
@@ -69,38 +83,40 @@ def task_run_ms(spark, stage_ids: list[int]) -> list[float]:
     return out
 
 
-def run(spark, reps: int, rows: int) -> dict:
+def run(spark) -> dict:
     from streamprocessing_spark import engine as E
 
-    records = spark.range(0, PARTITIONS * rows, 1, PARTITIONS).selectExpr(
+    records = spark.range(0, PARTITIONS * ROWS, 1, PARTITIONS).selectExpr(
         "CAST(id AS STRING) AS key", "CAST(id AS STRING) AS value"
     )
-    job = E.PluginOp(probe_op, "emit").apply(records, None)
+    op = E.PluginOp(probe_op, "emit")
+    timed, probed = op.apply(records, None), op.apply(records, PROBE)
     sc = spark.sparkContext
     run_ms: list[float] = []
     inval_ms: list[float] = []
     zips: list[int] = []
-    for rep in range(reps + 1):
+    for rep in range(REPS + 1):
         group = f"python-task-overhead-{rep}"
         sc.setJobGroup(group, group)
-        got = job.collect()
+        got = timed.collect()
         tracker = sc.statusTracker()
         stage_ids = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
+        marks = [r.value for r in probed.collect() if r.key == MARK]
         if rep == 0:  # worker start-up and first imports
             continue
-        passed = sum(1 for r in got if r.key != MARK)
-        if passed != PARTITIONS * rows:
-            raise RuntimeError(f"identity job returned {passed} records, expected {PARTITIONS * rows}")
-        for r in got:
-            if r.key == MARK:
-                ms, n = r.value.split(",")
-                inval_ms.append(float(ms))
-                zips.append(int(n))
+        if len(got) != PARTITIONS * ROWS:
+            raise RuntimeError(f"identity job returned {len(got)} records, expected {PARTITIONS * ROWS}")
+        if len(marks) != PARTITIONS:
+            raise RuntimeError(f"probe job returned {len(marks)} marks, expected {PARTITIONS}")
+        for m in marks:
+            ms, n = m.split(",")
+            inval_ms.append(float(ms))
+            zips.append(int(n))
         run_ms.extend(task_run_ms(spark, stage_ids))
     q = statistics.quantiles(inval_ms, n=4)
     return {
-        "reps": reps,
-        "rows_per_task": rows,
+        "reps": REPS,
+        "rows_per_task": ROWS,
         "tasks": len(run_ms),
         "task_run_ms_median": statistics.median(run_ms),
         "invalidate_caches_ms_median": round(statistics.median(inval_ms), 3),
@@ -111,25 +127,21 @@ def run(spark, reps: int, rows: int) -> dict:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--reps", type=int, default=10)
-    ap.add_argument("--rows", type=int, default=300, help="records per partition")
-    args = ap.parse_args()
     from streamprocessing_spark.session import get_spark
 
     spark = get_spark("python-task-overhead")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        res = run(spark, args.reps, args.rows)
+        res = run(spark)
     finally:
         spark.stop()
-    print(f"tasks timed: {res['tasks']} ({args.reps} reps x {PARTITIONS} partitions x {args.rows} rows)")
+    print(f"tasks timed: {res['tasks']} ({REPS} reps x {PARTITIONS} partitions x {ROWS} rows)")
     print(f"median task executorRunTime: {res['task_run_ms_median']:.0f} ms")
     print(
         f"in-worker invalidate_caches(): median {res['invalidate_caches_ms_median']:.3f} ms"
         f" [q1 {res['invalidate_caches_ms_q1']:.3f}, q3 {res['invalidate_caches_ms_q3']:.3f}]"
     )
-    print(f"zip finders in the worker's path_importer_cache: median {res['zip_finders_median']}")
+    print(f"zip finders left in the worker's path_importer_cache at task end: median {res['zip_finders_median']}")
     print(json.dumps(res))
     return 0
 
